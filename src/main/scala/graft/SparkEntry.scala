@@ -5244,8 +5244,8 @@ object SparkEntry {
     }),
     "t_tables" -> ((s, dir) => {
       import s.implicits._
-      // table mining to a relation (HtmlExtractor.documentElements): the
-      // structured-elements walk harvests caption + row/cell structure in
+      // table mining to a relation (HtmlStream.parse elements): the
+      // structured-elements pass harvests caption + row/cell structure in
       // document order, skips boilerplate-container tables (the nav-class
       // decoy must vanish), and harvests NESTED tables separately with
       // inner content excluded from outer cells. Three families pin the
@@ -5265,10 +5265,9 @@ object SparkEntry {
         }
       }
       val dumpUdf = udf { (html: String) =>
-        val els = graft.functions.html.HtmlExtractor
-          .documentElements(graft.functions.html.HtmlDom.parse(html))
-        val tables = els.collect { case graft.functions.html.HtmlExtractor.DocTable(rows) => rows }
-        val caps = els.collect { case graft.functions.html.HtmlExtractor.DocParagraph(t) => t }
+        val els = graft.functions.html.HtmlStream.parse(html).elements
+        val tables = els.collect { case graft.functions.html.HtmlStream.Table(rows) => rows }
+        val caps = els.collect { case graft.functions.html.HtmlStream.Paragraph(t) => t }
         val dump = tables.zipWithIndex.flatMap { case (rows, ti) =>
           rows.zipWithIndex.flatMap { case (r, ri) =>
             r.zipWithIndex.map { case (c, ci) => s"$ti/$ri/$ci/$c" }
@@ -5716,7 +5715,7 @@ object SparkEntry {
       }
       val auditUdf = udf { (html: String) =>
         val declared = graft.functions.html.StructuredData.declaredLang(html).getOrElse("")
-        val text = graft.functions.html.HtmlExtractor.extract(html).text
+        val text = graft.functions.html.HtmlStream.extract(html).text
         val detected = graft.functions.TextStats.langId(text)
         val primary = declared.split("-")(0)
         (declared, detected,

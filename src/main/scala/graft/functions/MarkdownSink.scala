@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.Extracted
-import graft.functions.html.{HtmlDom, HtmlExtractor}
+import graft.functions.html.HtmlStream
+import graft.functions.html.HtmlStream.{Element, Paragraph, Table}
 
 /** Markdown rendering of an extraction record (SURVEY.md §2.1 S6): the
   * Spark analog of the reference's `_generate_markdown`
@@ -19,10 +20,6 @@ import graft.functions.html.{HtmlDom, HtmlExtractor}
   * Status stand in. Not on the byte-identity path.
   */
 object MarkdownSink {
-
-  sealed trait Element
-  final case class Paragraph(text: String) extends Element
-  final case class Table(data: Seq[Seq[String]]) extends Element
 
   /** Structured render: the reference's full shape. `regionTypes` preserves
     * first-appearance order (the reference iterates dict insertion order).
@@ -70,21 +67,18 @@ object MarkdownSink {
     sb.toString
   }
 
-  /** Build structured elements + region stats from an HTML payload:
-    * paragraphs and tables IN DOCUMENT ORDER (the reference renders
-    * structured elements in source order), boilerplate containers skipped,
-    * table captions preserved as paragraphs before their table; region
-    * types = per-tag counts over ALL blocks in first-appearance order.
+  /** Build structured elements + region stats from an HTML payload in one
+    * streaming pass: paragraphs and tables IN DOCUMENT ORDER (the reference
+    * renders structured elements in source order), boilerplate containers
+    * skipped, table captions preserved as paragraphs before their table;
+    * region types = per-tag counts over ALL blocks in first-appearance
+    * order.
     */
   def htmlElements(html: String): (Seq[Element], Seq[(String, Int)]) = {
-    val root = HtmlDom.parse(html)
-    val elements: Seq[Element] = HtmlExtractor.documentElements(root).map {
-      case HtmlExtractor.DocParagraph(t) => Paragraph(t)
-      case HtmlExtractor.DocTable(rows)  => Table(rows)
-    }
+    val parsed = HtmlStream.parse(html)
     val order = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    HtmlExtractor.segment(root).foreach(b => order(b.tag) = order.getOrElse(b.tag, 0) + 1)
-    (elements, order.toSeq)
+    parsed.blocks.foreach(b => order(b.tag) = order.getOrElse(b.tag, 0) + 1)
+    (parsed.elements, order.toSeq)
   }
 
   /** Plain render from the flat record only (non-HTML formats): full-text

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Per-site template (boilerplate) line removal — the cleaning stage between
   * block-level extraction and corpus-level dedup.
   *
-  * The in-page extractor ([[graft.functions.html.HtmlExtractor]]) strips
+  * The in-page extractor ([[graft.functions.html.HtmlStream]]) strips
   * boilerplate it can SEE inside one page (nav/footer blocks by
   * link-density). What it cannot see is the cross-page signal: a cookie
   * banner rendered as plain text, a subscription pitch, a legal footer —

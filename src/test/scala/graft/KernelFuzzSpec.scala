@@ -123,4 +123,35 @@ class KernelFuzzSpec extends AnyFunSuite {
         .forall(b => b.lang != null && b.text.trim.nonEmpty))
     }
   }
+
+  /** Runs `body` on a fresh thread with the JVM's default stack size; a
+    * stack overflow fails the test instead of aborting the suite.
+    */
+  private def onDefaultStack(body: => Unit): Unit = {
+    var failure: Throwable = null
+    val t = new Thread(() => try body catch { case e: Throwable => failure = e })
+    t.start()
+    t.join()
+    failure match {
+      case null => ()
+      case so: StackOverflowError => fail("stack overflow on the default thread stack", so)
+      case e => throw e
+    }
+  }
+
+  test("deep nesting costs heap, not stack: 100k nested divs, 10k nested tables") {
+    import graft.functions.MarkdownSink
+    import graft.functions.html.HtmlStream
+    onDefaultStack {
+      val divs = "<div>" * 100000 + "deep" + "</div>" * 100000
+      val r = HtmlStream.extract(divs)
+      assert(r.text == "deep" && r.nBlocks == 1)
+      assert(MarkdownSink.htmlElements(divs) == (Seq(HtmlStream.Paragraph("deep")), Seq("div" -> 1)))
+      // unclosed on purpose: end of input closes all 30,000 open elements
+      val (tables, _) = MarkdownSink.htmlElements("<table><tr><td>" * 10000 + "cell")
+      assert(tables.length == 10000)
+      assert(tables.head == HtmlStream.Table(Seq(Seq(""))))
+      assert(tables.last == HtmlStream.Table(Seq(Seq("cell"))))
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{Charsets, FormatSniff, TextAssembly}
-import graft.functions.html.{Entities, HtmlDom, HtmlExtractor, HtmlTokenizer}
+import graft.functions.html.{Entities, HtmlStream, HtmlTokenizer}
 import graft.functions.pdf.PdfExtractor
 import graft.fixtures.{PdfGen, Rng}
 import org.scalatest.funsuite.AnyFunSuite
@@ -102,11 +102,9 @@ class TokenizerSpec extends AnyFunSuite {
     val html = """<p>a</p><textarea>line &amp; <b>not-a-tag</b></textarea><p>b</p>"""
     val texts = tokenize(html).collect { case Text(t) => t }
     assert(texts == Seq("a", "line & <b>not-a-tag</b>", "b"))
-    // streaming extractor sees the same text as the DOM path
-    val stream = graft.functions.html.HtmlStream.extract(s"<html><body><div>$html</div></body></html>")
-    val dom = graft.functions.html.HtmlExtractor.extract(s"<html><body><div>$html</div></body></html>")
-    assert(stream.text == dom.text)
-    assert(stream.text.contains("line & <b>not-a-tag</b>"))
+    // the extractor keeps it as its own block
+    val stream = HtmlStream.extract(s"<html><body><div>$html</div></body></html>")
+    assert(stream.text == "a\nline & <b>not-a-tag</b>\nb")
   }
   test("invalid numeric character references stay literal on both decode paths") {
     for (ref <- Seq("&#x110000;", "&#-1;", "&#99999999;")) {
@@ -131,7 +129,7 @@ class TokenizerSpec extends AnyFunSuite {
 
 class DomSpec extends AnyFunSuite {
   private def blocks(html: String): Seq[String] =
-    HtmlExtractor.segment(HtmlDom.parse(html)).map(_.text).toSeq
+    HtmlStream.parse(html).blocks.map(_.text)
 
   test("implied close: <p> chain") {
     assert(blocks("<body><p>one<p>two<p>three</body>") == Seq("one", "two", "three"))
@@ -160,14 +158,19 @@ class BoilerplateSpec extends AnyFunSuite {
         |<p>real content paragraph here</p>
         |<aside>related stuff</aside><footer>foot</footer>
         |<form><label>Search</label></form></body>""".stripMargin
-    assert(HtmlExtractor.extract(html).text == "real content paragraph here")
+    assert(HtmlStream.extract(html).text == "real content paragraph here")
+    // the block list still carries them, marked as boilerplate containers
+    assert(HtmlStream.parse(html).blocks.filter(_.boilerContainer).map(_.text) ==
+      Seq("Home", "site head", "related stuff", "foot", "Search"))
   }
   test("link-dense block dropped, text-dense block kept") {
     val html =
       """<body><div><a href="1">One</a> <a href="2">Two</a> <a href="3">Three</a></div>
         |<div>This sentence has plenty of plain words with <a href="x">one link</a> inside it.</div></body>""".stripMargin
-    val r = HtmlExtractor.extract(html)
+    val r = HtmlStream.extract(html)
     assert(r.text == "This sentence has plenty of plain words with one link inside it.")
+    val linkDense = HtmlStream.parse(html).blocks.head
+    assert(linkDense.text == "One Two Three" && linkDense.linkChars == 13 && !linkDense.isContent)
   }
   test("class/id token heuristics (sidebar, menu, cookie-banner)") {
     val html =
@@ -175,14 +178,7 @@ class BoilerplateSpec extends AnyFunSuite {
         |<div id="main-menu"><p>nor me</p></div>
         |<div class="cookie-banner">accept</div>
         |<p>keep me</p></body>""".stripMargin
-    assert(HtmlExtractor.extract(html).text == "keep me")
-  }
-  test("rawText baseline: reference get_text contract (boilerplate KEPT)") {
-    val html = "<html><head><title>T</title><script>x</script></head><body><nav>N</nav><p> a </p>\n<p>b</p></body></html>"
-    assert(HtmlExtractor.rawText(html) == "T\nN\na\nb")
-  }
-  test("stripTags regex fallback (reference enhanced_extract.py:504-514)") {
-    assert(HtmlExtractor.stripTags("<p>a</p>\n<div> b </div>") == "a\nb")
+    assert(HtmlStream.extract(html).text == "keep me")
   }
 }
 

@@ -174,6 +174,31 @@ class LinkSearchSpec extends AnyFunSuite {
     assert(top2.count() == 2)
   }
 
+  test("bm25TopKOver over shared union-of-legs frames == per-leg bm25TopK (property)") {
+    import spark.implicits._
+    val vocab = Vector("data", "spark", "fast", "query", "table", "row", "scan", "join", "sort", "disk")
+    val rng = new scala.util.Random(31)
+    for (_ <- 0 until 5) {
+      val docs = (0L until rng.between(4, 30).toLong).map { i =>
+        (i, Seq.fill(rng.between(0, 12))(vocab(rng.nextInt(vocab.length))).mkString(" "))
+      }.toDF("doc_id", "text")
+      // 1..8 terms per leg, drawn with repeats-free sampling; "absent" has no postings
+      val legs = Seq.fill(3)(rng.shuffle(vocab :+ "absent").take(rng.between(1, 9)))
+      val union = legs.flatten.distinct
+      val post = InvertedIndex.postings(docs, "doc_id", "text").filter($"term".isin(union: _*))
+      val dls = InvertedIndex.docLens(docs, "doc_id", "text")
+      val corpus = dls.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
+      for (terms <- legs) {
+        val k = Seq(1, 3, 50)(rng.nextInt(3))
+        val shared = InvertedIndex.bm25TopKOver(post, dls, corpus, terms, topK = k)
+          .orderBy($"rank").collect().toSeq
+        val perLeg = InvertedIndex.bm25TopK(docs, "doc_id", "text", terms, topK = k)
+          .orderBy($"rank").collect().toSeq
+        assert(shared == perLeg, s"terms=$terms k=$k")
+      }
+    }
+  }
+
   test("bm25TopK plans as TakeOrdered (per-partition heaps), no global sort") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val plan = InvertedIndex.bm25TopK(docs, "doc_id", "text", Seq("data", "fast"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.MarkdownSink
+import graft.functions.html.HtmlStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -57,10 +58,10 @@ class MarkdownSinkSpec extends AnyFunSuite {
   }
 
   test("nested/ugly tables still produce row-shaped data") {
-    val data = graft.functions.html.HtmlExtractor.tableData(
+    val (elements, _) = MarkdownSink.htmlElements(
       "<table><thead><tr><th>h</th></tr></thead><tbody><tr><td>a<b>x</b></td></tr></tbody></table>"
     )
-    assert(data == Seq(Seq(Seq("h"), Seq("a x"))))
+    assert(elements == Seq(HtmlStream.Table(Seq(Seq("h"), Seq("a x")))))
   }
 
   test("table captions are preserved; boiler containers are skipped; nested tables surface") {
@@ -72,11 +73,31 @@ class MarkdownSinkSpec extends AnyFunSuite {
         |</body>""".stripMargin
     val (elements, _) = MarkdownSink.htmlElements(html)
     assert(elements == Seq(
-      MarkdownSink.Paragraph("Lead."),
-      MarkdownSink.Paragraph("Q3 Sales"),
-      MarkdownSink.Table(Seq(Seq("x", "y"))),
-      MarkdownSink.Table(Seq(Seq("outer"))),
-      MarkdownSink.Table(Seq(Seq("inner")))
+      HtmlStream.Paragraph("Lead."),
+      HtmlStream.Paragraph("Q3 Sales"),
+      HtmlStream.Table(Seq(Seq("x", "y"))),
+      HtmlStream.Table(Seq(Seq("outer"))),
+      HtmlStream.Table(Seq(Seq("inner")))
     ), s"got $elements")
+  }
+
+  test("table rules: first caption only, empty cells kept, direct-child rows/cells") {
+    import HtmlStream.{Paragraph, Table}
+    def elements(html: String) = MarkdownSink.htmlElements(html)._1
+    // text inside a table but outside its cells is no paragraph
+    assert(elements(
+      "<body><table><caption>First</caption><caption>Second</caption>stray" +
+        "<tr><td>a</td><td></td><td>c</td></tr>" +
+        "<tbody><tr><th>b1</th><div><td>not a cell</td></div></tr></tbody>" +
+        "<div><tr><td>not a row</td></tr></div></table><p>after</p></body>"
+    ) == Seq(Paragraph("First"), Table(Seq(Seq("a", "", "c"), Seq("b1"))), Paragraph("after")))
+    // a caption's text includes a table nested in it; that table follows
+    assert(elements(
+      "<table><caption>Cap <table><tr><td>in</td></tr></table></caption><tr><td>o</td></tr></table>"
+    ) == Seq(Paragraph("Cap in"), Table(Seq(Seq("o"))), Table(Seq(Seq("in")))))
+    // inside a kept table, a nested table is kept even in a boilerplate container
+    assert(elements(
+      "<table><tr><td>x<nav><table><tr><td>kept</td></tr></table></nav></td></tr></table>"
+    ) == Seq(Table(Seq(Seq("x"))), Table(Seq(Seq("kept")))))
   }
 }
